@@ -8,8 +8,6 @@ byte-identical files.
   spreadsheet CSV export writes it (FIXTURES.md section 1): three junk rows
   written full width (``junk,,,,,``), the header at row index 3, then data
   with nulls, accents, multi-email cells and one-token surnames.
-- ``write_roster_drops``: four recipient drops for the streaming send, in
-  the FIXTURES.md section 3 variants, with duplicates across files.
 - ``write_operator_tables``: the ten testbed tables (TESTDATA.md schemas)
   that registered queries read, at a given row scale.
 """
@@ -109,58 +107,6 @@ def write_participants_csv(path: str, seed: int, n: int, tag: str) -> None:
         w.writerow(SHEET_HEADER)
         for row in participant_rows(seed, n, tag):
             w.writerow(["" if v is None else v for v in row])
-
-
-# Drop layouts, email first in every file: the streaming send reads every
-# drop with one fixed schema, and Spark's CSV source applies a given
-# schema by column position, not by header name. A drop whose first
-# column is not ``email`` would be read mis-mapped.
-DROP_LAYOUTS = (
-    ("old", ["email", "nombre", "usuario", "contrasena"]),
-    ("moodle", ["email", "username", "password", "firstname", "lastname"]),
-    ("fallback_email_only", ["email"]),
-    ("fallback_email_password", ["email", "password"]),
-)
-
-
-def write_roster_drops(root: str, seed: int, n_per_file: int) -> list[str]:
-    """Four roster drops in mixed schema variants. About 10% of each later
-    file repeats emails of earlier files; about 3% of rows have a blank
-    email. Returns the file paths."""
-    rng = random.Random(f"drops:{seed}:{n_per_file}")
-    os.makedirs(root, exist_ok=True)
-    seen: list[str] = []
-    paths = []
-    for k, (variant, header) in enumerate(DROP_LAYOUTS):
-        path = os.path.join(root, f"drop_{k}_{variant}.csv")
-        with open(path, "w", encoding="utf-8", newline="") as f:
-            w = csv.writer(f, lineterminator="\n")
-            w.writerow(header)
-            for i in range(n_per_file):
-                first, last = rng.choice(_FIRST), rng.choice(_LAST)
-                user = _ascii_token(first)[:6] + _ascii_token(last)[:6] + str(i)
-                if seen and rng.random() < 0.1:
-                    email = rng.choice(seen)
-                elif rng.random() < 0.03:
-                    email = "   " if rng.random() < 0.5 else ""
-                else:
-                    email = f"{user}.d{k}@{rng.choice(_DOMAINS)}"
-                    seen.append(email)
-                if rng.random() < 0.1 and email.strip():
-                    email = f" {email} "
-                values = {
-                    "email": email,
-                    "nombre": f"{first.title()} {last.title()}",
-                    "usuario": user,
-                    "contrasena": f"{user}2025",
-                    "username": user,
-                    "password": f"{user}2025",
-                    "firstname": first.title(),
-                    "lastname": last.title(),
-                }
-                w.writerow([values[c] for c in header])
-        paths.append(path)
-    return paths
 
 
 # ---------------------------------------------------------------------------

@@ -71,6 +71,11 @@ def layer_metrics(result: dict, events_dir: str, job_facts: dict[int, dict]) -> 
     spans = result["spans"]
     log = read_event_log(event_log_path(events_dir, result["app_id"]))
     att = attribute(log, spans, result["run_spans"])
+    if att["unattributed"]:
+        raise RuntimeError(
+            f"Spark jobs {att['unattributed']} ran inside traced jobs "
+            "without a span's job group or a stream run id"
+        )
     selft = self_times(spans)
     span_jobs: dict[int, list[int]] = defaultdict(list)
     for job_id, sid in att["job_span"].items():
@@ -120,8 +125,8 @@ def layer_metrics(result: dict, events_dir: str, job_facts: dict[int, dict]) -> 
         v["sinks.csv_bytes_per_record"].append(
             facts.get("csv_bytes", 0) / records if records else 0.0
         )
-        drain_ids = {s["id"] for s in mine if s["layer"] == "streaming.drain"}
-        runs = {r for r, sid in result["run_spans"].items() if sid in drain_ids}
+        mine_ids = {s["id"] for s in mine}
+        runs = {r for r, sid in result["run_spans"].items() if sid in mine_ids}
         batches = [p for p in result["progress"] if p["run_id"] in runs]
         v["streaming.batches"].append(len(batches))
         v["streaming.batch_s_p50"].append(

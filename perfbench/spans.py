@@ -9,8 +9,8 @@ entry to each span (``SparkContext.setJobGroup``). Jobs of a streaming
 query, ``foreachBatch`` ones included, run on the stream's thread with
 the stream's run id as their job group instead; the benchmark's
 ``StreamingQueryListener`` records which span was open when each run
-started. Any job left without either falls back
-to the innermost span open when it was submitted.
+started. A job submitted inside a traced benchmark job that carries
+neither is an attribution gap, and ``attribute`` reports it.
 """
 
 from __future__ import annotations
@@ -129,33 +129,26 @@ def read_event_log(path: str) -> dict:
 
 
 def attribute(log: dict, spans: list[dict], run_spans: dict[str, int]) -> dict:
-    """Assign every Spark job to a span id and every task to a job.
+    """Assign Spark jobs to span ids by job group or stream run id, and
+    every task to a job.
 
     Returns ``{"job_span": {job id: span id}, "job_tasks": {job id: [task]},
-    "job_result_stage": {job id: stage id}, "by": {how: count}}``.
+    "job_result_stage": {job id: stage id}, "unattributed": [job id]}``;
+    ``unattributed`` lists the jobs submitted while a top-level span was
+    open that carry neither a span's job group nor a mapped run id.
     """
-    by_id = {s["id"]: s for s in spans}
+    span_ids = {s["id"] for s in spans}
+    roots = [s for s in spans if s["parent"] is None]
     job_span: dict[int, int] = {}
-    how: dict[str, int] = defaultdict(int)
+    unattributed = []
     for j in log["jobs"].values():
-        sid = None
         group = j["group"] or ""
-        if group.startswith("span-") and int(group[5:]) in by_id:
-            sid, kind = int(group[5:]), "job_group"
+        if group.startswith("span-") and int(group[5:]) in span_ids:
+            job_span[j["id"]] = int(group[5:])
         elif group in run_spans:
-            sid, kind = run_spans[group], "stream_run_id"
-        else:
-            open_spans = [
-                s for s in spans if s["start"] <= j["submit"] <= (s["end"] or 0)
-            ]
-            if open_spans:
-                sid = max(open_spans, key=lambda s: s["start"])["id"]
-                kind = "time"
-            else:
-                kind = "unattributed"
-        how[kind] += 1
-        if sid is not None:
-            job_span[j["id"]] = sid
+            job_span[j["id"]] = run_spans[group]
+        elif any(r["start"] <= j["submit"] <= r["end"] for r in roots):
+            unattributed.append(j["id"])
     # a stage listed by several jobs runs in the latest one submitted
     # before its tasks launched
     stage_jobs: dict[int, list[dict]] = defaultdict(list)
@@ -181,5 +174,5 @@ def attribute(log: dict, spans: list[dict], run_spans: dict[str, int]) -> dict:
         "job_span": job_span,
         "job_tasks": dict(job_tasks),
         "job_result_stage": result_stage,
-        "by": dict(how),
+        "unattributed": sorted(unattributed),
     }

@@ -127,12 +127,21 @@ class Ledger:
 
 class _Handler(socketserver.StreamRequestHandler):
     server: "StubServer"
+    # a client silent this long is dropped, so a stalled send fails
+    # instead of hanging its job
+    timeout = 30.0
 
     def _reply(self, line: str) -> None:
         self.wfile.write(line.encode("ascii") + b"\r\n")
         self.wfile.flush()
 
     def handle(self) -> None:
+        try:
+            self._session()
+        except TimeoutError:
+            return
+
+    def _session(self) -> None:
         ledger = self.server.ledger
         self.request.do_handshake()
         conn_id = ledger.new_connection()

@@ -10,10 +10,13 @@ import filecmp
 import json
 import os
 import smtplib
+import threading
+import time
 from email.message import EmailMessage
 
 import gen
 import run
+import worker
 from spans import attribute, self_times
 
 
@@ -65,13 +68,9 @@ def test_participant_rows_cover_the_dirty_cases():
     assert share(lambda r: len(r[2].split()) == 1) >= 0.05
 
 
-def test_drops_and_tables_are_deterministic_per_seed(tmp_path):
+def test_tables_are_deterministic_per_seed(tmp_path):
     import pyarrow.parquet as pq
 
-    first = gen.write_roster_drops(str(tmp_path / "d1"), 5, 50)
-    second = gen.write_roster_drops(str(tmp_path / "d2"), 5, 50)
-    assert [os.path.basename(p) for p in first] == [os.path.basename(p) for p in second]
-    assert all(filecmp.cmp(p, q, shallow=False) for p, q in zip(first, second))
     gen.write_operator_tables(str(tmp_path / "t1"), 5, 600)
     gen.write_operator_tables(str(tmp_path / "t2"), 5, 600)
     gen.write_operator_tables(str(tmp_path / "t3"), 6, 600)
@@ -101,7 +100,7 @@ def test_self_time_subtracts_the_union_of_children():
     assert got[4] == 1.0
 
 
-def test_attribution_by_job_group_run_id_and_time():
+def test_attribution_by_job_group_and_run_id_reports_gaps():
     spans = [_span(0, None, 0.0, 10.0), _span(1, 0, 1.0, 5.0)]
     log = {
         "jobs": {
@@ -113,10 +112,33 @@ def test_attribution_by_job_group_run_id_and_time():
         "stage_tasks": {1: [{"launch": 2.1}], 2: [{"launch": 6.1}, {"launch": 6.2}]},
     }
     att = attribute(log, spans, {"run-a": 1})
-    assert att["job_span"] == {0: 1, 1: 1, 2: 0}
-    assert att["by"] == {"job_group": 1, "stream_run_id": 1, "time": 1, "unattributed": 1}
+    assert att["job_span"] == {0: 1, 1: 1}
+    # job 2 ran inside the traced span without a group; job 3 ran outside
+    assert att["unattributed"] == [2]
     assert len(att["job_tasks"][1]) == 2
     assert att["job_result_stage"][0] == 1
+
+
+def test_watchdog_cancels_only_past_the_deadline(monkeypatch):
+    class FakeContext:
+        def __init__(self):
+            self.cancels = 0
+
+        def cancelAllJobs(self):
+            self.cancels += 1
+
+    monkeypatch.setattr(worker, "JOB_TIMEOUT_S", 0.05)
+    for job_s, cancelled in ((0.0, False), (0.3, True)):
+        sc, done = FakeContext(), threading.Event()
+        if job_s == 0.0:
+            done.set()
+        watchdog = threading.Thread(target=worker.cancel_past_deadline, args=(sc, done))
+        watchdog.start()
+        time.sleep(job_s)
+        done.set()
+        watchdog.join(timeout=5)
+        assert not watchdog.is_alive()
+        assert (sc.cancels > 0) == cancelled
 
 
 def test_benchmark_json_names_what_the_run_prints():

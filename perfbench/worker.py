@@ -17,6 +17,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import threading
 import time
 
 from spans import Tracer
@@ -44,6 +45,18 @@ def sentinel_s(spark) -> float:  # type: ignore[no-untyped-def]
         spark.range(0, 20_000_000, 1, 4).selectExpr("sum(id % 7) AS s").collect()
         times.append(time.perf_counter() - t)
     return sorted(times[1:])[1]
+
+
+def cancel_past_deadline(sc, done: threading.Event) -> None:  # type: ignore[no-untyped-def]
+    """Once a benchmark job has run JOB_TIMEOUT_S, cancel every running
+    Spark job each second until it returns, so that a hung job raises
+    and is counted as failed."""
+    if done.wait(JOB_TIMEOUT_S):
+        return
+    while True:
+        sc.cancelAllJobs()
+        if done.wait(1.0):
+            return
 
 
 def make_listener(tracer: Tracer, run_spans: dict, progress: list):  # type: ignore[no-untyped-def]
@@ -115,13 +128,19 @@ def main() -> None:
         tracer.job = i
         tracer.enabled = bool(spec["trace"]) and i % 2 == 1
         rec = {"index": i, "traced": tracer.enabled, "error": None}
+        done = threading.Event()
+        threading.Thread(
+            target=cancel_past_deadline, args=(spark.sparkContext, done), daemon=True
+        ).start()
         t = time.perf_counter()
         try:
             rec.update(workload.job(i))
         except Exception as exc:  # noqa: BLE001 - a failed job is counted, not fatal
             rec["error"] = f"{type(exc).__name__}: {exc}"
+        finally:
+            done.set()
         rec["seconds"] = time.perf_counter() - t
-        if rec["error"] is None and rec["seconds"] > JOB_TIMEOUT_S:
+        if rec["seconds"] > JOB_TIMEOUT_S:
             rec["error"] = f"timed out: {rec['seconds']:.1f} s > {JOB_TIMEOUT_S} s"
         jobs.append(rec)
         i += 1

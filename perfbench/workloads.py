@@ -110,6 +110,7 @@ OPERATOR_QUERIES = (
     "rel_asof_join",
     "rel_profile_table",
     "sim_ivfpq_topk",
+    "stream_rate_limit",
 )
 
 
@@ -148,10 +149,11 @@ def canon_rows(columns: list[str], rows) -> list[str]:  # type: ignore[no-untype
 
 class OperatorMix:
     """One pass per job: each query of ``OPERATOR_QUERIES`` is built from
-    the registry and executed through the noop sink, then one
-    ``send-stream`` drain (availableNow, dry run, fresh work dir) runs over
-    four roster drops. The warm-up pass collects every query result for
-    the oracle check and pays the cold staged builds."""
+    the registry and executed through the noop sink. ``stream_rate_limit``
+    runs a Structured Streaming query (availableNow, one staged file per
+    micro-batch, a ``foreachBatch`` sink) inside its build call. The
+    warm-up pass collects every query result for the oracle check and
+    pays the cold staged builds."""
 
     def __init__(self, spark, spec: dict, tracer: Tracer) -> None:  # type: ignore[no-untyped-def]
         from etl_moodle_and_mass_email_sending_spark import registry
@@ -174,7 +176,6 @@ class OperatorMix:
                 "observed": dict(obs.get),
                 "oracle": self.oracles[name],
             }
-        self._drain("warm")
         self.warmup_record = record
 
     def job(self, i: int) -> dict:
@@ -192,37 +193,7 @@ class OperatorMix:
                         "noop"
                     ).mode("overwrite").save()
                 observed[name] = dict(obs.get)
-            drain = self._drain(f"p{i:04d}")
-        return {
-            "observed": observed,
-            "drain": drain,
-            "records": len(OPERATOR_QUERIES) + 1,
-        }
-
-    def _drain(self, tag: str) -> dict:
-        from etl_moodle_and_mass_email_sending_spark.sinks.smtp import SmtpConfig
-        from etl_moodle_and_mass_email_sending_spark.streaming.send_stream import (
-            StreamConfig,
-            start_send_stream,
-        )
-
-        work = os.path.join(self.spec["out_dir"], f"stream_{tag}")
-        cfg = StreamConfig(
-            checkpoint_dir=os.path.join(work, "checkpoint"),
-            receipts_dir=os.path.join(work, "receipts"),
-            available_now=True,
-        )
-        with self.t.span("streaming.send_stream.start_send_stream", "streaming.drain"):
-            q = start_send_stream(
-                self.spark,
-                self.spec["drops_dir"],
-                cfg,
-                SmtpConfig(sender=SENDER, dry_run=True),
-            )
-            q.awaitTermination()
-        if q.exception() is not None:
-            raise RuntimeError(f"send stream failed: {q.exception()}")
-        return {"receipts_dir": cfg.receipts_dir}
+        return {"observed": observed, "records": len(OPERATOR_QUERIES)}
 
 
 WORKLOADS = {"course_onboard": CourseOnboard, "operator_mix": OperatorMix}
