@@ -47,6 +47,7 @@ LAYER_METRICS: dict[str, str] = {
     "exec.spill_bytes": "B",
     "exec.tasks": "count",
     "exec.core_busy_ratio": "ratio",
+    "exec.peak_rss_mb": "MB",
     "trace.overhead_s": "s",
 }
 
@@ -158,6 +159,7 @@ def layer_metrics(result: dict, events_dir: str, job_facts: dict[int, dict]) -> 
 
     out = {name: _median(per_job.get(name, [])) for name in LAYER_METRICS}
     out["session.start_s"] = result["session_s"]
+    out["exec.peak_rss_mb"] = result["peak_rss_mb"]
     out["staging.build_s"] = sum(result["staging"].values())
     out["staging.keys"] = len(result["staging"])
     untraced = [j["seconds"] for j in result["jobs"] if not j["traced"] and j["error"] is None]

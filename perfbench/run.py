@@ -42,7 +42,7 @@ sys.path.insert(0, ROOT)
 # (cycled if a run has more jobs), warm-up courses before timing
 COURSE_ROWS = 400
 COURSE_SHEETS = 24
-WARMUP_COURSES = 2
+WARMUP_COURSES = 3
 # operator_mix size: lineitem rows of the generated testbed tables
 TABLE_ROWS = 6000
 WORKLOADS = ("course_onboard", "operator_mix")
@@ -51,7 +51,6 @@ END_TO_END = {
     "job_s_p50": "s",
     "records_per_s": "1/s",
     "setup_s": "s",
-    "peak_rss_mb": "MB",
 }
 
 
@@ -244,6 +243,7 @@ def _env_record(spec: dict, result: dict, load_before: tuple, ticks_before: list
         "steal_pct": 100.0 * delta[7] / total,
     }
     rec["sentinel_s_before"], rec["sentinel_s_after"] = result["sentinel_s"]
+    rec["peak_rss_mb"] = result["peak_rss_mb"]
     return rec
 
 
@@ -302,7 +302,6 @@ def main() -> int:
                 "records_per_s": sum(j.get("records", 0) for j in timed)
                 / sum(j["seconds"] for j in timed),
                 "setup_s": result["setup_s"],
-                "peak_rss_mb": result["peak_rss_mb"],
             }
             units = END_TO_END
         for name, unit in units.items():

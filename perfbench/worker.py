@@ -22,7 +22,8 @@ import time
 
 from spans import Tracer
 
-MIN_JOBS = 2
+# timed jobs per run even when they outlast --seconds: a median of three
+MIN_JOBS = 3
 JOB_TIMEOUT_S = 60.0
 
 
@@ -117,14 +118,13 @@ def main() -> None:
     setup_s = time.time() - t0
     sentinel_before = sentinel_s(spark)
 
-    # A traced run traces the odd jobs; its third job puts an untraced job
-    # on each side of the first traced one, so the warm-up trend does not
-    # land on one side of the overhead comparison.
-    min_jobs = MIN_JOBS + 1 if spec["trace"] else MIN_JOBS
+    # A traced run traces the odd jobs; with MIN_JOBS >= 3 an untraced job
+    # runs on each side of the first traced one, so the warm-up trend does
+    # not land on one side of the overhead comparison.
     jobs = []
     deadline = time.perf_counter() + spec["seconds"]
     i = 0
-    while i < min_jobs or time.perf_counter() < deadline:
+    while i < MIN_JOBS or time.perf_counter() < deadline:
         tracer.job = i
         tracer.enabled = bool(spec["trace"]) and i % 2 == 1
         rec = {"index": i, "traced": tracer.enabled, "error": None}

@@ -105,10 +105,8 @@ class CourseOnboard:
 
 # Registered queries of the operator mix, in pass order.
 OPERATOR_QUERIES = (
-    "ref_template_render",
     "text_mixture_execute",
     "rel_asof_join",
-    "rel_profile_table",
     "sim_ivfpq_topk",
     "stream_rate_limit",
 )
@@ -152,8 +150,9 @@ class OperatorMix:
     the registry and executed through the noop sink. ``stream_rate_limit``
     runs a Structured Streaming query (availableNow, one staged file per
     micro-batch, a ``foreachBatch`` sink) inside its build call. The
-    warm-up pass collects every query result for the oracle check and
-    pays the cold staged builds."""
+    first warm-up pass collects every query result for the oracle check
+    and pays the cold staged builds; one untimed pass follows it, because
+    the first warm pass still runs well above the steady pass time."""
 
     def __init__(self, spark, spec: dict, tracer: Tracer) -> None:  # type: ignore[no-untyped-def]
         from etl_moodle_and_mass_email_sending_spark import registry
@@ -177,6 +176,7 @@ class OperatorMix:
                 "oracle": self.oracles[name],
             }
         self.warmup_record = record
+        self.job(-1)
 
     def job(self, i: int) -> dict:
         from pyspark.sql import Observation
